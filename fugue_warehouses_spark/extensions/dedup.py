@@ -313,9 +313,15 @@ def _verify_partitions(
     parallelism still wins at bench scale). Clamped to [default_par,
     4096]: never fewer partitions than the cluster has slots, never so
     many that scheduling dominates."""
-    bytes_per_row = avg_gram_len * 16.0 + 128.0
-    need = int(n_candidate_ids * bytes_per_row / budget_bytes) + 1
+    build_bytes = n_candidate_ids * _build_row_bytes(avg_gram_len)
+    need = int(build_bytes / budget_bytes) + 1
     return max(default_par, min(4096, need))
+
+
+def _build_row_bytes(avg_gram_len: float) -> float:
+    """Estimated in-memory bytes of one verify build row carrying an
+    array of ``avg_gram_len`` longs (see _verify_partitions)."""
+    return avg_gram_len * 16.0 + 128.0
 
 
 def _sig_checkpoint_level(spark) -> StorageLevel:
@@ -1737,13 +1743,21 @@ def near_dup_pairs_against_index(
     collisions, with the same rounded-before-cut ``round_digits``
     boundary as :func:`near_dup_pairs_minhash`.
 
-    Scale shape: the index side contributes only its STORED signatures
-    to the banding explode (no text is read) and only colliding docs'
-    stored shingle arrays to the verify join; both sides band into one
-    frame so ``max_bucket_size`` caps the TRUE bucket population
-    (batch + index) before the self-join. Candidate pairs are tiny
-    relative to the index, so AQE broadcasts them into the grams join
-    rather than shuffling the index. With ``index_bands_df`` (a
+    Scale shape: the batch is signed ONCE (one Arrow pass,
+    checkpointed at the heap-adaptive :func:`_sig_checkpoint_level`)
+    and that frame feeds the banding and the verify. The index side
+    contributes only its STORED signatures to the banding explode (no
+    text is read) and only colliding docs' stored shingle arrays to the
+    verify join; both sides band into one frame so ``max_bucket_size``
+    caps the TRUE bucket population (batch + index) before the
+    self-join. The candidate pairs are counted once. When they fit a
+    fixed byte budget (the ``index_probe_broadcast`` site of
+    :mod:`plans.bounded`), the pairs are broadcast into the batch-
+    signature scan and that candidate-sized result into the index-grams
+    scan: verification then moves no shuffle at all. Above the budget,
+    verification is a SHUFFLE_HASH join whose partition count is
+    computed from the candidate count, so the hash build stays within
+    a fixed per-partition byte budget. With ``index_bands_df`` (a
     persisted :func:`build_minhash_band_index` table) even the
     index-side banding explode is precomputed, leaving the per-batch
     plan fully batch-sized except for the band join and the colliding
@@ -1754,6 +1768,45 @@ def near_dup_pairs_against_index(
     slices on the index side and miss every cross pair, so an in-plan
     guard fails the job on the first mismatching row.
     """
+    # heap-adaptive level for the gram-carrying batch signatures —
+    # same heap-for-hash-build trade as near_dup_pairs_minhash
+    new_sig = _shingle_minhash_numpy(
+        new_df, id_col, text_col, num_hashes, shingle
+    ).localCheckpoint(
+        eager=False, storageLevel=_sig_checkpoint_level(new_df.sparkSession)
+    )
+    return _probe_index(
+        new_sig, index_df, id_col, threshold, num_hashes, bands,
+        max_bucket_size, round_digits, index_bands_df, verify,
+    )
+
+
+# Byte budget of the broadcast verify in _probe_index: candidate pairs
+# times one pessimistic build row each (see _probe_index). Equal to
+# _verify_partitions' per-partition hash-build budget, so a candidate
+# set that takes the broadcast would fit one shuffle partition anyway.
+_PROBE_BROADCAST_BYTES = 32 << 20
+
+
+def _probe_index(
+    new_sig: DataFrame,
+    index_df: DataFrame,
+    id_col: str,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    max_bucket_size: int | None,
+    round_digits: int | None = 6,
+    index_bands_df: DataFrame | None = None,
+    verify: str = "grams",
+) -> DataFrame:
+    """:func:`near_dup_pairs_against_index` on an already-signed batch
+    ``new_sig`` (:func:`build_minhash_index` rows, checkpointed by the
+    caller: the banding and the verify both read it). Lets an ingest
+    sign each micro-batch once and reuse the signed frame for its index
+    and drop-log deltas."""
+    from fugue_warehouses_spark.plans import bounded
+
     if verify not in ("grams", "signature"):
         raise ValueError(
             f"verify must be 'grams' or 'signature', got {verify!r}"
@@ -1766,13 +1819,6 @@ def near_dup_pairs_against_index(
             "signatures instead"
         )
     rows_per_band = max(1, num_hashes // bands)
-    # heap-adaptive level for the gram-carrying batch signatures —
-    # same heap-for-hash-build trade as near_dup_pairs_minhash
-    new_sig = _shingle_minhash_numpy(
-        new_df, id_col, text_col, num_hashes, shingle
-    ).localCheckpoint(
-        eager=False, storageLevel=_sig_checkpoint_level(new_df.sparkSession)
-    )
     if index_bands_df is not None:
         # prebuilt band table (build_minhash_band_index): the
         # index-sized explode already ran at index-build time, and so
@@ -1826,65 +1872,123 @@ def near_dup_pairs_against_index(
             F.col("a.__id").alias("id_new"), F.col("b.__id").alias("id_match")
         )
         .distinct()
-        # consumed twice (gb semi filter + verify join): materialize the
-        # banding join once
+        # read by the count below and by the verify (twice on the
+        # shuffle branch): materialize the banding join once
         .localCheckpoint(eager=False)
     )
-    # id_new is always a batch doc, so the left verify side joins the
-    # batch grams only; only id_match (index doc or earlier batch doc)
-    # needs the batch+index union — the stored index shingle arrays
-    # (the dominant index bytes) are read once, not twice. The union is
-    # SEMI-FILTERED to ids that actually collide before its grams ride
-    # the verify join (same candidate-sized-not-corpus-sized discipline
-    # as near_dup_pairs_minhash), so a huge index contributes only its
-    # colliding docs' arrays to the shuffle.
-    # Verify-stage partition sizing, same discipline as
-    # near_dup_pairs_minhash: the SHUFFLE_HASH build OOMs instead of
-    # spilling, so compute the partition count from the candidate set
-    # (pairs are checkpointed — counting them materializes the banding
-    # join once for all consumers; round 12: a plain exchange-free
-    # count, not a countDistinct — n_pairs >= distinct ids, so the
-    # sizing errs toward more, smaller partitions, and the stats job
-    # is NOTHING BUT the banding materialization). Gram-length average
-    # comes from the batch signatures (cached, batch-sized); index
-    # docs are assumed same-corpus-distributed, absorbed by the
-    # sizing's safety factor.
-    par = new_df.sparkSession.sparkContext.defaultParallelism
+    # Verify strategy from the candidate count (pairs are checkpointed
+    # — counting them materializes the banding join once for all
+    # consumers; an exchange-free count, and n_pairs >= distinct ids).
+    # Every candidate pair carries at most one batch-side array into
+    # the broadcast; gram lengths are unknown without a pass over the
+    # batch, so each is costed at the pessimistic 4096 grams.
     n_cand_ids = pairs.count()
-    if verify == "signature":
-        # fixed-width rows (num_hashes int64 components): no gram-length
-        # pass exists to pay; size directly from the candidate count
-        nparts = _verify_partitions(n_cand_ids, float(num_hashes), par)
-    # same fast path as near_dup_pairs_minhash: only pay the gram-length
-    # pass when a pessimistic 64 KB/row could overflow default partitions
-    elif n_cand_ids and _verify_partitions(n_cand_ids, 4096.0, par) > par:
-        avg_len = (
-            new_sig.agg(F.avg(F.size("__grams")).alias("g")).first()["g"]
-            or 0.0
-        )
-        nparts = _verify_partitions(n_cand_ids, avg_len, par)
-    else:
-        nparts = par
-    # ga is semi-filtered to colliding batch ids too: non-colliding
-    # batch docs never reach the output, so their arrays need not ride
-    # the verify shuffle at all
     vcol = "__sig" if verify == "signature" else "__grams"
-    ga = (
-        new_sig.select(
-            F.col(id_col).alias("id_new"), F.col(vcol).alias("__ga")
-        )
-        .join(pairs.select("id_new").distinct(), "id_new", "left_semi")
-        .repartition(nparts, F.col("id_new"))
-        .hint("shuffle_hash")
+    row_len = float(num_hashes) if verify == "signature" else 4096.0
+    broadcast = bounded.driver_fast_path_ok(
+        "index_probe_broadcast",
+        broadcast_bytes=(
+            n_cand_ids * (16.0 + _build_row_bytes(row_len)),
+            _PROBE_BROADCAST_BYTES,
+        ),
     )
-    gb = (
-        new_sig.select(F.col(id_col), F.col(vcol))
-        .unionByName(index_df.select(F.col(id_col), F.col(vcol)))
-        .withColumnRenamed(id_col, "id_match")
-        .join(pairs.select("id_match").distinct(), "id_match", "left_semi")
-        .select("id_match", F.col(vcol).alias("__gb"))
-        .repartition(nparts, F.col("id_match"))
-        .hint("shuffle_hash")
+    # Disjointness guard (lazy in-plan raise_error, like the signature-
+    # length guard), shaped as a FILTER over the post-distinct pair
+    # set: a batch doc colliding with its OWN index copy (batch
+    # replayed after indexing) produces an id_new == id_match pair
+    # here, so fail loudly instead of emitting a silent jaccard-1.0
+    # self-pair. A filter predicate survives column pruning (a
+    # projection guard is dropped under count()), and it must NOT sit
+    # on the pre-distinct projection: there the optimizer infers
+    # isnotnull(<guard CASE>) from the aggregate/join keys and hoists
+    # it into the bucket-join condition, firing on ordinary
+    # within-batch band self-collisions that the adjacent filter
+    # excludes.
+    guard = F.when(
+        F.col("id_new") == F.col("id_match"),
+        F.raise_error(
+            F.lit(
+                "near_dup_pairs_against_index: id present in both "
+                "the new batch and the index — index ids must be "
+                "disjoint from batch ids (was the batch replayed "
+                "after indexing?)"
+            )
+        ).isNotNull(),
+    ).otherwise(F.lit(True))
+    if broadcast:
+        # small candidate set: the guarded pairs are broadcast into the
+        # batch-signature scan, and that candidate-sized result into
+        # the batch+index array scan — two broadcast hash joins, no
+        # distinct aggregate, no repartition, no shuffle
+        nparts = None
+        ga = F.broadcast(pairs.filter(guard)).join(
+            new_sig.select(
+                F.col(id_col).alias("id_new"), F.col(vcol).alias("__ga")
+            ),
+            "id_new",
+        )
+        verified = (
+            new_sig.select(F.col(id_col), F.col(vcol))
+            .unionByName(index_df.select(F.col(id_col), F.col(vcol)))
+            .select(
+                F.col(id_col).alias("id_match"), F.col(vcol).alias("__gb")
+            )
+            .join(F.broadcast(ga), "id_match")
+        )
+    else:
+        # id_new is always a batch doc, so the left verify side joins
+        # the batch arrays only; only id_match (index doc or earlier
+        # batch doc) needs the batch+index union — the stored index
+        # shingle arrays (the dominant index bytes) are read once, not
+        # twice. Both sides are SEMI-FILTERED to ids that actually
+        # collide before their arrays ride the verify shuffle (same
+        # candidate-sized-not-corpus-sized discipline as
+        # near_dup_pairs_minhash), and the SHUFFLE_HASH build OOMs
+        # instead of spilling, so the partition count is computed from
+        # the candidate set. The gram-length average comes from the
+        # batch signatures (cached, batch-sized); index docs are
+        # assumed same-corpus-distributed, absorbed by the sizing's
+        # safety factor.
+        par = new_sig.sparkSession.sparkContext.defaultParallelism
+        if verify == "signature":
+            # fixed-width rows (num_hashes int64 components): no
+            # gram-length pass exists to pay
+            nparts = _verify_partitions(n_cand_ids, float(num_hashes), par)
+        # same fast path as near_dup_pairs_minhash: only pay the
+        # gram-length pass when a pessimistic 64 KB/row could overflow
+        # default partitions
+        elif n_cand_ids and _verify_partitions(n_cand_ids, 4096.0, par) > par:
+            avg_len = (
+                new_sig.agg(F.avg(F.size("__grams")).alias("g")).first()["g"]
+                or 0.0
+            )
+            nparts = _verify_partitions(n_cand_ids, avg_len, par)
+        else:
+            nparts = par
+        ga = (
+            new_sig.select(
+                F.col(id_col).alias("id_new"), F.col(vcol).alias("__ga")
+            )
+            .join(pairs.select("id_new").distinct(), "id_new", "left_semi")
+            .repartition(nparts, F.col("id_new"))
+            .hint("shuffle_hash")
+        )
+        gb = (
+            new_sig.select(F.col(id_col), F.col(vcol))
+            .unionByName(index_df.select(F.col(id_col), F.col(vcol)))
+            .withColumnRenamed(id_col, "id_match")
+            .join(
+                pairs.select("id_match").distinct(), "id_match", "left_semi"
+            )
+            .select("id_match", F.col(vcol).alias("__gb"))
+            .repartition(nparts, F.col("id_match"))
+            .hint("shuffle_hash")
+        )
+        verified = pairs.filter(guard).join(ga, "id_new").join(gb, "id_match")
+    # the sizing inputs ride along, so a pair-count overshoot of the
+    # partition count (n_pairs >> distinct ids) shows in the record
+    bounded.decisions["index_probe_broadcast"].update(
+        n_cand_ids=n_cand_ids, nparts=nparts
     )
     na, nb = F.size(F.col("__ga")), F.size(F.col("__gb"))
     if verify == "signature":
@@ -1905,32 +2009,6 @@ def near_dup_pairs_against_index(
     if round_digits is not None:
         sim = F.round(sim, round_digits)
     pre_thr = threshold - _round_eps(round_digits)
-    # Disjointness guard (lazy in-plan raise_error, like the signature-
-    # length guard), shaped as a FILTER over the post-distinct pair
-    # set: a batch doc colliding with its OWN index copy (batch
-    # replayed after indexing) produces an id_new == id_match pair
-    # here, so fail loudly instead of emitting a silent jaccard-1.0
-    # self-pair. A filter predicate survives column pruning (a
-    # projection guard is dropped under count()), and it must NOT sit
-    # on the pre-distinct projection: there the optimizer infers
-    # isnotnull(<guard CASE>) from the aggregate/join keys and hoists
-    # it into the bucket-join condition, firing on ordinary
-    # within-batch band self-collisions that the adjacent filter
-    # excludes.
-    pairs = pairs.filter(
-        F.when(
-            F.col("id_new") == F.col("id_match"),
-            F.raise_error(
-                F.lit(
-                    "near_dup_pairs_against_index: id present in both "
-                    "the new batch and the index — index ids must be "
-                    "disjoint from batch ids (was the batch replayed "
-                    "after indexing?)"
-                )
-            ).isNotNull(),
-        ).otherwise(F.lit(True))
-    )
-    verified = pairs.join(ga, "id_new").join(gb, "id_match")
     if verify == "grams":
         # gram-count prefilter: |a∩b|/|a∪b| can't reach the threshold
         # when the set SIZES already forbid it. Signature arrays are

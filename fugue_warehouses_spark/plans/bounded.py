@@ -10,6 +10,7 @@ pattern that rounds 6-7 grew in three places with three bound styles
         property-tested to produce identical results
         (tests: test_graph.py local/distributed agreement,
         test_similarity.py local-CC vs distributed dedup_near,
+        test_dedup.py broadcast vs shuffle index-probe verify,
         plus the 320k probes that exceed every budget).
 
 Why it exists: at bench scale the driver path removes whole seconds of
@@ -23,6 +24,14 @@ fast path didn't exist. The registered sites and their budgets:
 | pagerank_local | edges; est. driver bytes | 8M edges; 256 MB | broadcast-rank join loop (graph.py) |
 | within_batch_cc | survivor-matrix FLOPs (n²·dim) | 1e11 FLOPs | similarity_pairs + dedup_near (similarity.py) |
 | bpe_train_local | merge work (n_merges·vocab symbols); est. driver bytes | 5e6 ops; 256 MB | per-step pair-count shuffle chain (bpe.py) |
+| index_probe_broadcast | est. broadcast bytes (candidate pairs × one 4096-gram build row) | 32 MB | sized SHUFFLE_HASH verify join (dedup.py) |
+
+``index_probe_broadcast`` is the broadcast form of the same contract:
+the small instance is not finished on the driver but collected once
+and broadcast into the verify scans of
+``extensions.dedup.near_dup_pairs_against_index``. Its record also
+carries the candidate count ``n_cand_ids`` and the shuffle branch's
+partition count ``nparts`` (None when the broadcast ran).
 
 Static CONTRACT bounds (a collect whose size is fixed by the
 operator's definition, not gated at runtime) are deliberately NOT

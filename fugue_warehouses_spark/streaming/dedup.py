@@ -194,10 +194,14 @@ def run_near_dedup_ingest(
     plain at-least-once. Returns the survivors table as a batch frame
     (empty, with the stream's schema, if nothing ever arrived).
 
-    Scale: per batch, one banding shuffle on (band, bucket) and one
-    grams verify join — both batch-sized on the probe side; the index
-    is never re-signed, never re-banded (band_store deltas), and never
-    rewritten (deltas only). Do not
+    Scale: per batch, one Python MinHash pass signs the batch ONCE
+    (checkpointed; the probe, the index delta and the drop-log delta
+    all read it), then one banding shuffle on (band, bucket) and one
+    verify join — a broadcast join when the candidate set is small,
+    see :func:`extensions.dedup.near_dup_pairs_against_index` — both
+    batch-sized on the probe side; the index is never re-signed, never
+    re-banded (band_store deltas), and never rewritten (deltas only).
+    Do not
     ``vacuum`` the index store (versions are data, not history).
     After N micro-batches the store holds N version directories; probe
     reads stay one multi-path scan but the LISTING cost grows with N.
@@ -218,18 +222,18 @@ def run_near_dedup_ingest(
     reconstruct the full pair graph. With it,
     :func:`reconcile_survivors` recomputes batch-CC semantics offline
     from stored signatures alone (no text re-read, no re-signing).
-    Costs one batch-sized re-sign + signature write per batch (the
-    probe computes signatures internally but does not expose them, so
-    the dropped subset is signed again — dropped docs are a fraction
-    of an already batch-sized frame); compacted under the same
-    ``compact_every``.
+    Costs one signature write per batch: the dropped docs' rows are
+    taken from the batch's signed frame, not signed again; compacted
+    under the same ``compact_every``.
     """
     from pyspark.errors import AnalysisException
 
     from fugue_warehouses_spark.extensions.dedup import (
+        _probe_index,
+        _sig_checkpoint_level,
         build_minhash_band_index,
         build_minhash_index,
-        near_dup_pairs_against_index,
+        near_dup_pairs_from_signatures,
     )
     from fugue_warehouses_spark.plans import versioned as V
 
@@ -249,41 +253,30 @@ def run_near_dedup_ingest(
     # near-dedup for exactly the missing docs (the banding join simply
     # finds no rows — no error), so coverage is verified ONCE per
     # stream start: index ids absent from the band table are re-banded
-    # and appended as one repair delta. Cost: one id-level anti-join
-    # per stream START, never per batch. (A band table missing
-    # entirely still bootstraps with a full banding on first batch.)
+    # and appended as one repair delta. Cost: one anti-join over ids
+    # alone per stream START (for an availableNow ingest, every run),
+    # never per micro-batch; full index rows are read only for the ids
+    # found missing. (A band table missing entirely still bootstraps
+    # with a full banding on first batch.)
     if band_path is not None:
-        # released_after: the repair's localCheckpoint blocks (which
-        # can be index-sized when a whole prior run lacked band rows)
-        # are garbage once the repair delta commits; without the scope
-        # they'd persist for the lifetime of the long-lived stream JVM
-        # — the exact leak the per-batch scoping exists to prevent
-        # (round-9 ADVICE). Same one-streaming-query-per-process
-        # contract as the per-batch scope below.
-        from fugue_warehouses_spark.plans.checkpoint import released_after
-
-        with released_after(spark):
-            try:
-                _idx0 = V.read_all_versions(spark, index_store)
-            except FileNotFoundError:
-                _idx0 = None
-            if _idx0 is not None:
-                try:
-                    _bands0 = V.read_all_versions(spark, band_path)
-                except FileNotFoundError:
-                    _bands0 = None
-                if _bands0 is not None:
-                    _missing = _idx0.join(
-                        _bands0.select(id_col).distinct(), id_col, "left_anti"
-                    ).localCheckpoint()
-                    if not _missing.rdd.isEmpty():
-                        V.write_version(
-                            build_minhash_band_index(
-                                _missing, id_col, num_hashes, bands
-                            ),
-                            band_path,
-                            spark,
-                        )
+        try:
+            idx0 = V.read_all_versions(spark, index_store)
+            bands0 = V.read_all_versions(spark, band_path)
+        except FileNotFoundError:
+            idx0 = None
+        if idx0 is not None:
+            missing = idx0.select(id_col).join(
+                bands0.select(id_col), id_col, "left_anti"
+            )
+            if not missing.isEmpty():
+                V.write_version(
+                    build_minhash_band_index(
+                        idx0.join(missing, id_col, "left_semi"),
+                        id_col, num_hashes, bands,
+                    ),
+                    band_path,
+                    spark,
+                )
 
     def _compact_if_due(store: str) -> None:
         if (
@@ -293,8 +286,8 @@ def run_near_dedup_ingest(
             V.compact_versions(spark, store)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # every per-batch localCheckpoint block (batch copy, index
-        # read, survivors, signature delta) is garbage the moment this
+        # every per-batch localCheckpoint block (batch copy, signed
+        # batch, candidate pairs, survivors) is garbage the moment this
         # batch's writes commit; without the scope they accumulate in
         # the one long-lived stream JVM across micro-batches —
         # unbounded block growth on a rolling crawl, and the round-9
@@ -314,12 +307,13 @@ def run_near_dedup_ingest(
 
     def _apply_inner(batch_df: DataFrame) -> None:
         batch_df = batch_df.localCheckpoint()
-        if batch_df.rdd.isEmpty():
+        if batch_df.isEmpty():
             return
         try:
-            idx = V.read_all_versions(spark, index_store).localCheckpoint(
-                eager=False
-            )
+            # not checkpointed: with a band table the probe scans the
+            # index once, for (id, grams) only, and every reader of the
+            # probe's result runs before this batch's writes
+            idx = V.read_all_versions(spark, index_store)
         except FileNotFoundError:
             idx = None
         if idx is not None and ("__grams" in idx.columns) != (
@@ -336,15 +330,21 @@ def run_near_dedup_ingest(
                 "store keeps one verify mode for its lifetime; compact/"
                 "rebuild the store or match the ingest's verify param"
             )
+        # the batch is signed ONCE: the probe, the index delta and the
+        # drop-log delta all read this frame (lazy, so the probe's
+        # first job materializes it)
+        sig = build_minhash_index(
+            batch_df, id_col, text_col, num_hashes, shingle
+        ).localCheckpoint(
+            eager=False, storageLevel=_sig_checkpoint_level(spark)
+        )
         if idx is None:
-            # first batch, empty store: only within-batch near-dedup
-            from fugue_warehouses_spark.extensions.dedup import (
-                near_dup_pairs_minhash,
-            )
-
-            pairs = near_dup_pairs_minhash(
-                batch_df, id_col, text_col, threshold, num_hashes,
-                shingle, bands, max_bucket_size=max_bucket_size,
+            # first batch, empty store: only within-batch near-dedup,
+            # verified exactly from the grams whatever ``verify`` is
+            # (the function checkpoints its input again: one more
+            # batch-sized block copy, once per store)
+            pairs = near_dup_pairs_from_signatures(
+                sig, id_col, threshold, num_hashes, bands, max_bucket_size,
             ).select(F.col("id_b").alias("__dup"))
         else:
             idx_bands = None
@@ -362,17 +362,19 @@ def run_near_dedup_ingest(
                     )
                     V.write_version(idx_bands, band_path, spark)
                     idx_bands = V.read_all_versions(spark, band_path)
-            pairs = near_dup_pairs_against_index(
-                batch_df, idx, id_col, text_col, threshold, num_hashes,
-                shingle, bands, max_bucket_size,
-                index_bands_df=idx_bands,
-                verify=verify,
+            pairs = _probe_index(
+                sig, idx, id_col, threshold, num_hashes, bands,
+                max_bucket_size, index_bands_df=idx_bands, verify=verify,
             ).select(F.col("id_new").alias("__dup"))
         survivors = batch_df.join(
             pairs.distinct(),
             batch_df[id_col] == F.col("__dup"),
             "left_anti",
         ).localCheckpoint()
+        # the deltas are the signed frame split by survival; signature
+        # mode stores signature-ONLY rows
+        delta = sig if verify != "signature" else sig.drop("__grams")
+        kept_ids = survivors.select(id_col)
         if update_index:
             # deltas FIRST (band, then index): any crash after this
             # point leaves the batch ids banded/indexed, so a replay
@@ -381,36 +383,22 @@ def run_near_dedup_ingest(
             # band table a SUPERSET of the index — orphan band rows
             # are harmless (no grams to verify against / replay
             # guard), missing ones would silently skip dedup.
-            sig = build_minhash_index(
-                survivors, id_col, text_col, num_hashes, shingle,
-                keep_grams=(verify != "signature"),
-            ).localCheckpoint()
+            kept = delta.join(kept_ids, id_col, "left_semi")
             if band_path is not None:
                 V.write_version(
                     build_minhash_band_index(
-                        sig, id_col, num_hashes, bands
+                        kept, id_col, num_hashes, bands
                     ),
                     band_path,
                     spark,
                 )
                 _compact_if_due(band_path)
-            V.write_version(sig, index_store, spark)
+            V.write_version(kept, index_store, spark)
             _compact_if_due(index_store)
         if dropped_store is not None:
-            dropped = batch_df.join(
-                pairs.distinct(),
-                batch_df[id_col] == F.col("__dup"),
-                "left_semi",
-            )
-            if not dropped.rdd.isEmpty():
-                V.write_version(
-                    build_minhash_index(
-                        dropped, id_col, text_col, num_hashes, shingle,
-                        keep_grams=(verify != "signature"),
-                    ),
-                    dropped_store,
-                    spark,
-                )
+            dropped = delta.join(kept_ids, id_col, "left_anti")
+            if not dropped.isEmpty():
+                V.write_version(dropped, dropped_store, spark)
                 _compact_if_due(dropped_store)
         survivors.write.mode("append").parquet(survivors_path)
         # delivery-contract marker for raw-path readers (hidden to

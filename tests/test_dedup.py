@@ -391,6 +391,62 @@ def test_near_dup_against_index_rejects_replayed_batch(spark):
         D.near_dup_pairs_against_index(df, idx).count()
 
 
+@pytest.mark.parametrize("verify", ["grams", "signature"])
+def test_index_probe_broadcast_and_shuffle_verify_agree(
+    spark, tables, monkeypatch, verify
+):
+    """The index probe verifies a candidate set under the byte budget
+    by broadcast and a larger one by the sized SHUFFLE_HASH join. Both
+    branches must return identical (id_new, id_match, jaccard_sim),
+    with and without a prebuilt band table; the bounded.decisions
+    record names the branch and its sizing inputs; the replay guard
+    fires on both."""
+    from fugue_warehouses_spark.plans.bounded import decisions
+
+    docs = tables["documents"]
+    hist = docs.filter(F.col("doc_id") % 5 != 4)
+    new = docs.filter(F.col("doc_id") % 5 == 4)
+    keep_grams = verify == "grams"
+    idx = D.build_minhash_index(
+        hist, "doc_id", "text", keep_grams=keep_grams
+    ).localCheckpoint()
+    bands = D.build_minhash_band_index(idx, "doc_id").localCheckpoint()
+
+    def probe(index_bands_df, budget):
+        with monkeypatch.context() as m:
+            m.setattr(D, "_PROBE_BROADCAST_BYTES", budget)
+            rows = D.near_dup_pairs_against_index(
+                new, idx, "doc_id", "text", threshold=0.6,
+                index_bands_df=index_bands_df, verify=verify,
+            ).collect()
+        return sorted(tuple(r) for r in rows), decisions[
+            "index_probe_broadcast"
+        ]
+
+    for index_bands_df in (None, bands):
+        small, d = probe(index_bands_df, D._PROBE_BROADCAST_BYTES)
+        assert d["taken"] is True and d["nparts"] is None
+        n_cand = d["n_cand_ids"]
+        big, d = probe(index_bands_df, -1)
+        assert d["taken"] is False
+        assert d["n_cand_ids"] == n_cand > 0 and d["nparts"] >= 1
+        assert small == big and small
+
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    replayed = D.build_minhash_index(df, keep_grams=keep_grams)
+    for budget, taken in ((D._PROBE_BROADCAST_BYTES, True), (-1, False)):
+        with monkeypatch.context() as m:
+            m.setattr(D, "_PROBE_BROADCAST_BYTES", budget)
+            with pytest.raises(Exception, match="disjoint"):
+                D.near_dup_pairs_against_index(
+                    df, replayed, verify=verify
+                ).count()
+        assert decisions["index_probe_broadcast"]["taken"] is taken
+
+
 def test_incremental_dedup_bloom_matches_exact(spark):
     """The Bloom-prefiltered plan must return EXACTLY the exact plan's
     rows — including when the filter is deliberately undersized so

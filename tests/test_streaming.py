@@ -8,6 +8,8 @@ batch/stream-unified contract of streaming/windows.py et al.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1294,3 +1296,126 @@ def test_run_near_dedup_ingest_signature_mode_end_to_end(spark, tmp_path):
             checkpoint_dir=str(tmp_path / "ckpt2"),
             threshold=0.5,
         )
+
+
+def _write_two_batch_feed(docs, feed):
+    """Batch 1 holds ids 0-14 plus 20 and 21 (exact copies of 0 and 1:
+    dropped within the first batch, against an empty index); batch 2
+    holds the rest (copies of 2-4 and near copies of 5-9: dropped
+    against the index)."""
+    first = (F.col("doc_id") < 15) | F.col("doc_id").isin(20, 21)
+    for part in (docs.filter(first), docs.filter(~first)):
+        part.coalesce(1).write.mode("append").parquet(feed)
+
+
+@pytest.mark.parametrize("verify", ["grams", "signature"])
+def test_ingest_deltas_equal_signed_survivors_and_drops(
+    spark, tmp_path, verify
+):
+    """Each micro-batch is signed once and its index and drop-log
+    deltas are cut from that signed frame. Row for row they must equal
+    signing the survivors and the dropped docs from text, in both
+    verify modes, from the first batch (empty index) on."""
+    from fugue_warehouses_spark.extensions import dedup as D
+    from fugue_warehouses_spark.plans import versioned as V
+    from fugue_warehouses_spark.streaming import (
+        read_parquet_stream,
+        run_near_dedup_ingest,
+    )
+
+    docs = _near_dedup_corpus(spark)
+    feed = str(tmp_path / "feed")
+    _write_two_batch_feed(docs, feed)
+    survivors = run_near_dedup_ingest(
+        read_parquet_stream(spark, feed, max_files_per_trigger=1),
+        index_store=str(tmp_path / "idx"),
+        survivors_path=str(tmp_path / "kept"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        threshold=0.5,
+        dropped_store=str(tmp_path / "dropped"),
+        verify=verify,
+    )
+    dropped = docs.join(survivors.select("doc_id"), "doc_id", "left_anti")
+    keep_grams = verify == "grams"
+
+    def rows(df):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*sorted(df.columns)).collect()
+        )
+
+    # both batches dropped docs: a drop-log version each
+    assert len(V.list_versions(spark, str(tmp_path / "dropped"))) == 2
+    assert rows(V.read_all_versions(spark, str(tmp_path / "idx"))) == rows(
+        D.build_minhash_index(survivors, keep_grams=keep_grams)
+    )
+    assert rows(
+        V.read_all_versions(spark, str(tmp_path / "dropped"))
+    ) == rows(D.build_minhash_index(dropped, keep_grams=keep_grams))
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs started while ``fn`` runs, read from the status
+    store: a streaming query runs its jobs under its own job group, so
+    the status tracker's no-group lookup would miss them."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def job_ids() -> set:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = job_ids()
+    fn()
+    return len(job_ids() - before)
+
+
+def test_near_dedup_job_counts_stay_pinned(spark, tmp_path):
+    """Job counts of one steady-state index probe fetched as Arrow and
+    of one ingest round against an existing index, at fixture scale.
+    Counts do not depend on host load, so a rise is a structural
+    regression: an extra signing pass, emptiness test or verify
+    stage."""
+    from fugue_warehouses_spark.extensions.dedup import (
+        near_dup_pairs_against_index,
+    )
+    from fugue_warehouses_spark.plans import versioned as V
+    from fugue_warehouses_spark.streaming import (
+        read_parquet_stream,
+        run_near_dedup_ingest,
+    )
+
+    docs = _near_dedup_corpus(spark)
+    staged, feed = str(tmp_path / "staged"), str(tmp_path / "feed")
+    _write_two_batch_feed(docs, staged)
+    files = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
+    os.makedirs(feed)
+    index = str(tmp_path / "idx")
+
+    def ingest_next():
+        name = files.pop(0)
+        os.rename(os.path.join(staged, name), os.path.join(feed, name))
+        run_near_dedup_ingest(
+            read_parquet_stream(spark, feed, max_files_per_trigger=1),
+            index_store=index,
+            survivors_path=str(tmp_path / "kept"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            threshold=0.5,
+        )
+
+    ingest_next()  # first round: builds the index and its band table
+    query = docs.filter("doc_id >= 20").select(
+        (F.col("doc_id") + 100).alias("doc_id"), "text"
+    )
+
+    def probe():
+        near_dup_pairs_against_index(
+            query, V.read_all_versions(spark, index), threshold=0.5,
+            index_bands_df=V.read_all_versions(spark, index + "_bands"),
+        ).toArrow()
+
+    probe()  # warm
+    probe_jobs = _jobs_started(spark, probe)
+    ingest_jobs = _jobs_started(spark, ingest_next)
+    assert probe_jobs <= 12, probe_jobs
+    assert ingest_jobs <= 26, ingest_jobs
